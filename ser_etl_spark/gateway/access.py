@@ -244,12 +244,13 @@ class GatewayFront:
         start = time.monotonic()
         status = "ok"
         pattern = None
+        cached = False
         try:
             claims = self.authenticator.authenticate(token)
             require_scope(claims, self.required_scope)
             self.limiter.check(client_key)
             result = self.engine.execute_query(sql)
-            pattern = result.pattern
+            pattern, cached = result.pattern, result.cached
             return result
         except AuthError:
             status = "401"
@@ -270,6 +271,7 @@ class GatewayFront:
                 status=status,
                 duration_ms=(time.monotonic() - start) * 1000.0,
                 pattern=pattern,
+                cached=cached,
             )
 
     def health(self) -> dict:

@@ -776,6 +776,285 @@ class TestServingCache:
             spark.catalog.dropTempView("caller_owned_view")
 
 
+def _publish_tables(spark, tmp_path, store, version, n):
+    """Publish ``t`` (``k`` = 0..n-1) and ``u`` (``k`` = 0..n/10-1) as
+    snapshot ``version`` of ``store``."""
+    from ser_etl_spark.etl.build import build_snapshot
+    from ser_etl_spark.etl.publish import publish_snapshot
+
+    frames = {
+        "t": spark.range(n).withColumnRenamed("id", "k"),
+        "u": spark.range(n // 10).withColumnRenamed("id", "k"),
+    }
+    out = str(tmp_path / f"build_{version}")
+    r = build_snapshot(frames, out, views={})
+    publish_snapshot(out, store, tables=r.tables, views={}, version=version)
+
+
+def _tagged_jobs(spark, tag: str) -> int:
+    """Jobs carrying ``tag``, counted once the listener bus has caught up.
+    The tag is a local property, so the executor's collect thread (an
+    ``InheritableThread``) carries it too."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return len(list(sc.statusTracker().getJobIdsForTag(tag)))
+
+
+class TestResultReuse:
+    """Answers of a published (immutable) snapshot are reused per query
+    text, row cap, plan and input files; everything else always runs."""
+
+    def _engine(self, spark, tmp_path, n=100, **catalog_kw):
+        store = str(tmp_path / "store")
+        _publish_tables(spark, tmp_path, store, "20240101_000000", n)
+        catalog = SnapshotCatalog(spark, store, **catalog_kw)
+        return SparkQueryEngine(spark, catalog), store
+
+    def test_repeat_is_a_hit_with_the_same_envelope_and_no_job(
+        self, spark, tmp_path
+    ):
+        engine, _ = self._engine(spark, tmp_path)
+        sc = spark.sparkContext
+        q = "SELECT COUNT(*) FROM t"
+        sc.addJobTag("reuse-miss")
+        try:
+            first = engine.execute_query(q)
+        finally:
+            sc.removeJobTag("reuse-miss")
+        sc.addJobTag("reuse-hit")
+        try:
+            again = engine.execute_query(q)
+        finally:
+            sc.removeJobTag("reuse-hit")
+        assert not first.cached and again.cached
+        assert (again.data, again.columns, again.row_count, again.pattern) == (
+            first.data, first.columns, first.row_count, first.pattern
+        )
+        assert first.data[0][first.columns[0]] == 100
+        assert _tagged_jobs(spark, "reuse-miss") >= 1
+        assert _tagged_jobs(spark, "reuse-hit") == 0
+
+    def test_log_line_carries_cached(self, spark, tmp_path, caplog):
+        import json as _json
+        import logging
+
+        from ser_etl_spark.gateway.access import (
+            GatewayFront,
+            StaticTokenAuthenticator,
+        )
+
+        engine, _ = self._engine(spark, tmp_path)
+        front = GatewayFront(
+            engine=engine,
+            authenticator=StaticTokenAuthenticator(
+                tokens={"good": {"scope": "read:analytics"}}
+            ),
+        )
+        with caplog.at_level(logging.INFO, logger="ser_etl_spark.gateway"):
+            for _ in range(2):
+                front.query("good", "1.2.3.4", "SELECT COUNT(*) FROM u")
+        lines = [_json.loads(r.message) for r in caplog.records]
+        assert [line["cached"] for line in lines] == [False, True]
+
+    def test_publish_and_refresh_miss_and_serve_the_new_version(
+        self, spark, tmp_path
+    ):
+        engine, store = self._engine(spark, tmp_path)
+        q = "SELECT MAX(k) FROM t"
+        engine.execute_query(q)
+        assert engine.execute_query(q).cached
+        _publish_tables(spark, tmp_path, store, "20240102_000000", 200)
+        engine.catalog.refresh(force=True)
+        fresh = engine.execute_query(q)
+        assert not fresh.cached
+        assert fresh.data[0][fresh.columns[0]] == 199
+        again = engine.execute_query(q)
+        assert again.cached and again.data == fresh.data
+
+    @pytest.mark.parametrize("expr", [
+        "rand()", "uuid()", "now()", "current_timestamp()", "current_date()",
+    ])
+    def test_random_and_time_dependent_queries_never_hit(
+        self, spark, tmp_path, expr
+    ):
+        engine, _ = self._engine(spark, tmp_path, n=10)
+        q = f"SELECT {expr} FROM t WHERE 1=1"
+        assert engine.validator.is_valid(q)
+        for _ in range(2):
+            assert not engine.execute_query(q).cached
+        assert len(engine._results) == 0
+
+    def test_plain_directory_never_caches(self, spark, sf_small):
+        engine = SparkQueryEngine(spark, SnapshotCatalog(spark, sf_small))
+        for _ in range(2):
+            assert not engine.execute_query("SELECT COUNT(*) FROM orders").cached
+        assert len(engine._results) == 0
+
+    def test_failing_query_leaves_no_entry(self, spark, tmp_path):
+        engine, _ = self._engine(spark, tmp_path)
+        # an ANSI cast error (Spark 4's default mode) raised by the tasks
+        q = "SELECT CAST(concat('x', k) AS INT) FROM t WHERE 1=1"
+        engine.catalog.refresh()
+        df = spark.sql(q).limit(5000)
+        # the text is eligible for reuse, so only the failure keeps it out
+        assert engine._result_key(df, q, 5000) is not None
+        for _ in range(2):
+            with pytest.raises(Exception):
+                engine.execute_query(q)
+        assert len(engine._results) == 0
+
+    def test_timed_out_query_leaves_no_entry(self, spark, tmp_path):
+        store = str(tmp_path / "store")
+        _publish_tables(spark, tmp_path, store, "20240101_000000", 3000)
+        engine = SparkQueryEngine(
+            spark,
+            SnapshotCatalog(spark, store),
+            QueryValidator(max_execution_time_s=1.0),
+        )
+        with pytest.raises(QueryTimeoutError):
+            engine.execute_query("SELECT SUM(a.k * b.k * c.k) FROM t a, t b, t c")
+        assert len(engine._results) == 0
+
+    def test_hit_rows_cannot_corrupt_the_stored_copy(self, spark, tmp_path):
+        engine, _ = self._engine(spark, tmp_path)
+        q = "SELECT k, array(k, k + 1) AS ks FROM t WHERE k < 2"
+        first = engine.execute_query(q)
+        want = [{"k": 0, "ks": [0, 1]}, {"k": 1, "ks": [1, 2]}]
+        for res in (first, engine.execute_query(q)):
+            assert res.data == want
+            res.data[0]["k"] = -1
+            res.data[1]["ks"].append(99)
+            res.data.append({})
+            res.columns.append("x")
+        last = engine.execute_query(q)
+        assert last.cached and last.data == want and last.columns == ["k", "ks"]
+
+    def test_row_bound_evicts_least_recently_used(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from ser_etl_spark.gateway import executor
+
+        monkeypatch.setattr(executor, "RESULT_CACHE_MAX_ROWS", 3)
+        engine, _ = self._engine(spark, tmp_path)
+        a, b, c, d = (
+            f"SELECT {f}(k) FROM t" for f in ("COUNT", "SUM", "MIN", "MAX")
+        )
+        for q in (a, b, c):
+            assert not engine.execute_query(q).cached
+        assert engine.execute_query(a).cached  # b is now least recent
+        assert not engine.execute_query(d).cached  # evicts b
+        assert len(engine._results) == 3
+        assert [engine.execute_query(q).cached for q in (a, c, d, b)] == [
+            True, True, True, False,
+        ]
+        # a result above the bound is served, never stored
+        big = "SELECT k FROM t WHERE k < 10"
+        for _ in range(2):
+            res = engine.execute_query(big)
+            assert res.row_count == 10 and not res.cached
+
+    def test_row_total_holds_under_contention(self, monkeypatch):
+        """8 threads (more than this host's cores) get and put through one
+        cache with a tiny switch interval; a lost update to the row total
+        would break the bound or the bookkeeping."""
+        import sys
+        import threading
+
+        from ser_etl_spark.gateway import executor
+
+        monkeypatch.setattr(executor, "RESULT_CACHE_MAX_ROWS", 50)
+        cache = executor._ResultCache()
+
+        def worker(w: int) -> None:
+            for i in range(2000):
+                key = (w * 7 + i) % 40
+                if cache.get(key) is None:
+                    cache.put(key, ["c"], [None] * (key % 5))
+
+        threads = [threading.Thread(target=worker, args=(w,)) for w in range(8)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=60)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(th.is_alive() for th in threads)
+        held = sum(max(1, len(rows)) for _, rows in cache._entries.values())
+        assert cache._rows == held <= 50
+
+    def test_concurrent_readers_across_flips(self, spark, tmp_path):
+        """3 threads repeat texts over two tables while two new versions
+        are published under a short TTL. Every answer is one published
+        version's answer, and once a version has been current for longer
+        than the TTL (plus slack for a slow re-registration), no request
+        is answered from an older version — so no stored answer outlives
+        the files it was read from."""
+        import threading
+        import time
+
+        ttl_s, slack_s, dwell_s = 0.25, 1.0, 1.5
+        sizes = (100, 200, 300)
+        engine, store = self._engine(spark, tmp_path, n=sizes[0], ttl_s=ttl_s)
+        expected = {
+            "SELECT COUNT(*) FROM t": [n for n in sizes],
+            "SELECT MAX(k) FROM t": [n - 1 for n in sizes],
+            "SELECT SUM(k) FROM u": [sum(range(n // 10)) for n in sizes],
+        }
+        texts = list(expected)
+        replies: list[tuple[str, float, object, bool]] = []
+        errors: list[BaseException] = []
+        stop = threading.Event()
+
+        def reader(offset: int) -> None:
+            i = offset
+            while not stop.is_set():
+                q = texts[i % len(texts)]
+                i += 1
+                started = time.monotonic()
+                try:
+                    res = engine.execute_query(q)
+                except BaseException as exc:  # surfaced below
+                    errors.append(exc)
+                    return
+                replies.append(
+                    (q, started, res.data[0][res.columns[0]], res.cached)
+                )
+
+        threads = [threading.Thread(target=reader, args=(i,)) for i in range(3)]
+        for th in threads:
+            th.start()
+        published = [0.0]
+        try:
+            for v, n in enumerate(sizes[1:], start=2):
+                time.sleep(dwell_s)
+                _publish_tables(spark, tmp_path, store, f"2024010{v}_000000", n)
+                published.append(time.monotonic())
+            time.sleep(dwell_s + slack_s)
+        finally:
+            stop.set()
+            for th in threads:
+                th.join(timeout=120)
+        assert not any(th.is_alive() for th in threads)
+        assert errors == []
+        assert any(cached for *_, cached in replies)
+        for q, started, value, cached in replies:
+            assert value in expected[q], (q, value, cached)
+            version = expected[q].index(value)
+            current = max(
+                v for v, at in enumerate(published)
+                if started > at + ttl_s + slack_s
+            )
+            assert version >= current, (q, value, cached, started)
+        # settled: the last version, first read then reused
+        for q in texts:
+            first, again = engine.execute_query(q), engine.execute_query(q)
+            assert first.data[0][first.columns[0]] == expected[q][-1]
+            assert again.cached and again.data == first.data
+
+
 class TestExplain:
     def test_explain_returns_plan_without_running(self, spark, sf_small):
         from ser_etl_spark.gateway.catalog import SnapshotCatalog
