@@ -1,17 +1,28 @@
 #!/usr/bin/env python
-"""Regenerate tests/_scan_budget.py — the expected per-table STATIC scan
+"""Regenerate tests/_scan_budget.py — the expected per-table scan
 multiset for every registered query.
 
 The budget is the anti-regression gate for the double-scan class the r9
 verdict flagged (normalizer recompute: a second full pass over the same
 fact table to fetch a total/max that a window or sentinel could carry).
 ``tests/test_plans.py::test_scan_budget_multiset`` compares each query's
-actual static plan against this file; a rewrite that ADDS a scan fails
-the gate until this generator is deliberately re-run and the diff
-reviewed. Legitimate >1 counts (self-joins like basket_lift, two-table
-queries, thin column-pruned normalizer scans like vocab_growth's
-doc_id-only bounds row) are part of the recorded budget — the gate pins
-the REVIEWED multiset, it does not force 1.
+measured row against this file; a rewrite that ADDS a scan fails the
+gate until this generator is deliberately re-run and the diff reviewed.
+Legitimate >1 counts (self-joins like basket_lift, two-table queries,
+thin column-pruned normalizer scans like vocab_growth's doc_id-only
+bounds row) are part of the recorded budget — the gate pins the
+REVIEWED multiset, it does not force 1.
+
+A row has two halves:
+
+- ``<table>: n`` — scans in the STATIC plan of the returned frame;
+- ``<build:executions>: n`` and ``<build:<table>>: n`` — present when
+  the builder itself runs SQL (driver-collected training loops, label
+  propagation, eager checkpoints, streaming micro-batches): the number
+  of SQL executions Spark recorded while the query BUILT, and the
+  per-table scans inside them. These are the scans no static plan
+  shows; reading them from Spark pins every such pass without any
+  counter in operator code.
 
 Scans of non-testdata paths (persisted artifacts: ANN index, postings,
 band files) are normalized to "<artifact>" so the budget is stable
@@ -36,133 +47,72 @@ SF = "/root/testdata/sf0.001"
 #: cheaply explainable (none currently — kept for the escape hatch)
 SKIP: set[str] = set()
 
-#: Artifact-building queries whose corpus scans happen inside
-#: DRIVER-COLLECTED iterations (training loops, label propagation) —
-#: invisible to the static plan, so an empty multiset would read as "no
-#: scans" when the honest answer is "scans outside the final plan"
-#: (VERDICT r10 #7). For these, the budget additionally records the
-#: iteration-counter DELTA observed while BUILDING the query at SF:
-#: name -> (module path, counter keys). A query may legitimately move
-#: more than one counter (bpe_merge_step: the per-iteration pair
-#: collects AND the one-time vocab checkpoint); the gate replays the
-#: same measurement, so a hidden extra pass — or a counter outside the
-#: declared set — fails it.
-OFF_PLAN: dict[str, tuple[str, tuple[str, ...]]] = {
-    "kmeans_train_readout": (
-        "ser_etl_spark.operators.similarity", ("lloyd",)
-    ),
-    "dedup_clusters": ("ser_etl_spark.operators.dedup", ("propagation",)),
-    "dedup_cluster_sizes": (
-        "ser_etl_spark.operators.dedup", ("propagation",)
-    ),
-    # surfaced by the r12 all-counter snapshot: these two consume the
-    # propagation closure during build as well (the old single-counter
-    # measurement could not see it — the exact desync VERDICT r11 #6
-    # warned about)
-    "dedup_canonical": ("ser_etl_spark.operators.dedup", ("propagation",)),
-    "semdedup_canonical": (
-        "ser_etl_spark.operators.dedup", ("propagation",)
-    ),
-    "mmr_rerank_topk": ("ser_etl_spark.operators.retrieval", ("mmr_pool",)),
-    "mixture_rebalance": (
-        "ser_etl_spark.operators.sampling", ("mixture_rank",)
-    ),
-    "quality_quantile_normalize": (
-        "ser_etl_spark.operators.curation", ("quantile_rank",)
-    ),
-    # r14: one adjacent-pair top-1 collect per BPE merge iteration;
-    # r15 adds the one-time vocab checkpoint job (ADVICE r14 #1)
-    "bpe_merge_step": (
-        "ser_etl_spark.operators.text", ("bpe_pairs", "bpe_vocab_ckpt")
-    ),
-    # r15: delta_dedup_pairs checkpoints its candidate sliver once per
-    # invocation (1 for the batch query; 2 for the streaming replay's
-    # two micro-batches, which run during BUILD via foreachBatch)
-    "incremental_dedup": (
-        "ser_etl_spark.operators.dedup", ("delta_candidates",)
-    ),
-    "streaming_incremental_dedup": (
-        "ser_etl_spark.operators.dedup", ("delta_candidates",)
-    ),
-}
 
-
-#: every module that declares a DRIVER_PASSES counter dict. The
-#: measurement below snapshots ALL of them around every build, so a
-#: builder that starts moving a counter it is not budgeted for — or a
-#: new off-plan pass added without an OFF_PLAN entry — shows up as an
-#: unexpected ``<driver:...>`` delta and fails the gate (VERDICT r11
-#: #6: the counters are module globals; pin the contract, don't trust
-#: the wiring). Counter KEYS must be globally unique across modules
-#: (tests/test_plans.py::test_driver_passes_contract pins that).
-COUNTER_MODULES: tuple[str, ...] = (
-    "ser_etl_spark.operators.curation",
-    "ser_etl_spark.operators.dedup",
-    "ser_etl_spark.operators.retrieval",
-    "ser_etl_spark.operators.sampling",
-    "ser_etl_spark.operators.similarity",
-    "ser_etl_spark.operators.text",
-)
-
-
-def all_driver_counters() -> dict[str, int]:
-    """One flat snapshot of every DRIVER_PASSES counter (keys are
-    globally unique by contract)."""
-    import importlib
-
-    out: dict[str, int] = {}
-    for mod_path in COUNTER_MODULES:
-        for key, val in importlib.import_module(
-            mod_path
-        ).DRIVER_PASSES.items():
-            if key in out:
-                raise AssertionError(f"duplicate driver counter key {key!r}")
-            out[key] = val
-    return out
-
-
-#: sf dirs whose build-time-resolved artifacts are already warm. The
-#: trained-quantizer consumers (cluster_balanced_sample,
-#: ivf_ann_topk_trained, …) call ensure_trained_quantizer at BUILD
-#: time: on a cold per-user tmp cache the first measured build would
-#: run Lloyd training and show an unexpected ``<driver:lloyd>`` delta
-#: that is an artifact-cache fact, not a plan fact (ADVICE r12).
-#: Pre-warming once per sf makes the measurement cache-state- and
-#: order-independent; the checked-in budget is the warm-cache one.
+#: sf dirs whose build-time-resolved artifacts are already warm. Builders
+#: that consume a derived artifact (ANN index, MinHash bands, text
+#: postings, trained quantizer) resolve it at BUILD time: on a cold
+#: per-user tmp cache the first measured build would also run the
+#: artifact's own build jobs — an artifact-cache fact, not a plan fact
+#: (ADVICE r12). Pre-warming once per sf makes the measurement
+#: cache-state- and order-independent; the checked-in budget is the
+#: warm-cache one.
 _PREWARMED: set[str] = set()
 
 
 def prewarm_artifacts(spark, sf: str) -> None:
-    """Resolve every artifact whose build moves a driver counter, once
-    per sf dir, BEFORE any counter snapshot."""
+    """Resolve every build-time artifact at its registered geometry,
+    once per sf dir, BEFORE any build is measured."""
     if sf in _PREWARMED:
         return
     _PREWARMED.add(sf)
-    from ser_etl_spark.operators.similarity import ensure_trained_quantizer
+    from ser_etl_spark.operators.dedup import ensure_minhash_bands
+    from ser_etl_spark.operators.similarity import (
+        ensure_ann_index,
+        ensure_trained_quantizer,
+    )
+    from ser_etl_spark.operators.text import ensure_text_postings
 
-    ensure_trained_quantizer(spark, sf)
+    for ensure in (
+        ensure_ann_index,
+        ensure_minhash_bands,
+        ensure_text_postings,
+        ensure_trained_quantizer,
+    ):
+        ensure(spark, sf)
 
 
-def build_with_driver_passes(spec, spark, sf: str):
-    """Invoke the builder, returning (df, off_plan_annotation): the
-    ``{"<driver:key>": delta}`` of EVERY driver counter the build moved
-    (expected nonempty only for OFF_PLAN queries — any other movement
-    fails the budget compare). Artifact caches are pre-warmed first so
-    the deltas reflect the query build alone."""
+def build_time_executions(spec, spark, sf: str):
+    """Invoke the builder, returning ``(df, plans)``: the formatted
+    physical plan of every SQL execution Spark ran while the builder
+    built — the eager jobs (driver-collected iterations, checkpoints,
+    streaming micro-batches) that no static plan shows. Read from the
+    SQL status store, which Spark keeps with the UI disabled; the
+    listener bus is drained on both sides so every execution the build
+    started has landed. Artifact caches are pre-warmed first so the
+    plans reflect the query build alone."""
     prewarm_artifacts(spark, sf)
-    before = all_driver_counters()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    done = store.executionsList()
+    last = done.last().executionId() if done.nonEmpty() else -1
     df = spec.builder(spark, sf)
-    after = all_driver_counters()
-    deltas = {
-        f"<driver:{k}>": after[k] - before[k]
-        for k in after
-        if after[k] != before[k]
-    }
-    return df, deltas
+    bus.waitUntilEmpty()
+    # the store lists executions in ascending id order: walk back from
+    # the newest to the last one that predates the build
+    plans = []
+    it = store.executionsList().reverseIterator()
+    while it.hasNext():
+        ex = it.next()
+        if ex.executionId() <= last:
+            break
+        plans.append(ex.physicalPlanDescription())
+    return df, plans[::-1]
 
 
 def scan_multiset(plan: str) -> dict[str, int]:
-    """Table -> static scan count, artifact paths normalized."""
+    """Table -> scan count in one formatted plan, artifact paths
+    normalized."""
     out: dict[str, int] = {}
     # formatted explain: every scan node owns a "Location:" detail line
     for loc in re.findall(r"Location: \S+ \[([^\]]*)\]", plan):
@@ -175,9 +125,27 @@ def scan_multiset(plan: str) -> dict[str, int]:
     return out
 
 
+def budget_row(spec, spark, sf: str) -> tuple[dict[str, int], str]:
+    """``(row, plan)``: the query's static per-table scan multiset plus,
+    when its build ran SQL, ``<build:executions>`` and one
+    ``<build:<table>>`` scan count per table those executions read."""
+    from ser_etl_spark.session import explain_string
+
+    df, plans = build_time_executions(spec, spark, sf)
+    plan = explain_string(df, "formatted")
+    row = scan_multiset(plan)
+    if plans:
+        row["<build:executions>"] = len(plans)
+    for build_plan in plans:
+        for table, count in scan_multiset(build_plan).items():
+            key = f"<build:{table}>"
+            row[key] = row.get(key, 0) + count
+    return row, plan
+
+
 def main() -> None:
     from ser_etl_spark.registry import all_queries
-    from ser_etl_spark.session import explain_string, get_spark
+    from ser_etl_spark.session import get_spark
 
     spark = get_spark(
         app_name="gen-scan-budget",
@@ -191,20 +159,18 @@ def main() -> None:
         if name in SKIP:
             continue
         try:
-            df, off_plan = build_with_driver_passes(spec, spark, SF)
-            plan = explain_string(df, "formatted")
+            budget[name] = budget_row(spec, spark, SF)[0]
         except Exception as exc:  # builder needs a live run (streaming)
             print(f"!! {name}: {type(exc).__name__}: {exc}", file=sys.stderr)
-            continue
-        budget[name] = {**scan_multiset(plan), **off_plan}
 
     lines = [
         '"""GENERATED by scripts/gen_scan_budget.py — do not hand-edit.',
         "",
-        "Expected static per-table scan multiset per registered query.",
-        "Regenerate DELIBERATELY after a plan-shape change and review the",
-        'diff: an added scan is the double-scan regression this gate exists',
-        'to catch."""',
+        "Expected per-table scan multiset per registered query: the static",
+        "plan's scans, plus <build:...> entries for the SQL executions (and",
+        "the scans inside them) its builder runs. Regenerate DELIBERATELY",
+        "after a plan-shape change and review the diff: an added scan is the",
+        'double-scan regression this gate exists to catch."""',
         "",
         "SCAN_BUDGET: dict[str, dict[str, int]] = {",
     ]

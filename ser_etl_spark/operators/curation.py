@@ -40,10 +40,6 @@ from ser_etl_spark.functions.numeric import fround
 from ser_etl_spark.registry import register
 from ser_etl_spark.sources.parquet import load_table
 
-#: off-plan corpus-pass counters (scan-budget gate contract — see
-#: scripts/gen_scan_budget.py OFF_PLAN and the dedup.py twin).
-DRIVER_PASSES = {"quantile_rank": 0}
-
 #: Default chunk geometry: 200-char windows advancing by 150 (50 overlap).
 CHUNK_CHARS = 200
 CHUNK_OVERLAP = 50
@@ -1692,7 +1688,6 @@ def quality_quantile_normalize(docs: DataFrame, k: int = 50) -> DataFrame:
         "_b", F.coalesce(F.sum("_bc").over(wb), F.lit(0)).alias("_off")
     )
     wg = Window.partitionBy("_b").orderBy("quality", "doc_id")
-    DRIVER_PASSES["quantile_rank"] += 1
     ranked = (
         base.join(F.broadcast(offsets), "_b")
         .withColumn("_g", F.col("_off") + F.row_number().over(wg))

@@ -368,14 +368,6 @@ def _propagation_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-#: Driver-iteration telemetry: every label-propagation round bumps this.
-#: The rounds run inside the driver loop (localCheckpoint per round), so
-#: the static scan-budget gate sees an empty plan; tests/test_plans.py
-#: pins the DELTA of this counter instead — an extra round (or a shape
-#: change that stops convergence) can't hide (VERDICT r10 #7).
-DRIVER_PASSES = {"propagation": 0, "delta_candidates": 0}
-
-
 def duplicate_clusters(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     """Connected components over ``(doc_a, doc_b)`` duplicate pairs:
     ``(doc_id, cluster_id, is_survivor)`` with ``cluster_id`` = the
@@ -438,7 +430,6 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     prev_sum = label_sum(labels) if numeric_ids else None
     changed = -1
     for _ in range(max_iter):
-        DRIVER_PASSES["propagation"] += 1
         updated = _propagation_round(edges, labels).localCheckpoint()
         if numeric_ids:
             new_sum = label_sum(updated)
@@ -1243,7 +1234,6 @@ def delta_dedup_pairs(
     bands: int = 16,
     n: int = 3,
     corpus_bands: DataFrame | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Near-duplicate matches of a NEW document batch against an
     EXISTING corpus: ``(corpus_doc, delta_doc, jaccard)`` for every
@@ -1273,14 +1263,11 @@ def delta_dedup_pairs(
     join (the exchanges can't reuse — the three consumers project
     different keys). Measured 3.53 -> 2.19 s min-of-3 at sf0.1 on the
     full delta. Computed from the parquet inputs inside every
-    invocation (the bpe_merge_steps discipline, never cross-run); the
-    build-time job is recorded in ``DRIVER_PASSES['delta_candidates']``
-    and pinned by the scan-budget gate so a hidden extra pass — or
-    this one silently growing — fails loudly (ADVICE r14 #1).
-    ``checkpoint=False`` preserves the full lineage (no build-time job)
-    for callers composing this into a larger plan — and for the plan
-    test that asserts the corpus side reads the band artifact, which
-    the checkpoint otherwise hides from the returned plan.
+    invocation (the bpe_merge_steps discipline, never cross-run). The
+    checkpoint runs as a build-time SQL execution: the scan-budget gate
+    reads its plan from Spark and pins the execution count and every
+    table scan inside it, so a hidden extra pass — or this job silently
+    growing — fails loudly (ADVICE r14 #1).
     """
     cb = (
         corpus_bands
@@ -1301,9 +1288,7 @@ def delta_dedup_pairs(
         )
         .distinct()
     )
-    if checkpoint:
-        DRIVER_PASSES["delta_candidates"] += 1
-        candidates = candidates.localCheckpoint(eager=True)
+    candidates = candidates.localCheckpoint(eager=True)
     corpus_hit = corpus.join(
         candidates.select(F.col("corpus_doc").alias("doc_id")).distinct(),
         "doc_id",

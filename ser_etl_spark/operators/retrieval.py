@@ -61,11 +61,6 @@ FUSION_DEPTH = 20
 #: `0.5*sim - 0.5*maxsel` is the same IEEE expression on every engine).
 MMR_SELECT = 5
 
-#: off-plan corpus-pass counters (scan-budget gate contract: the static
-#: plan of a driver-collected stage is invisible, so the gate records
-#: the iteration delta observed while building — scripts/gen_scan_budget).
-DRIVER_PASSES = {"mmr_pool": 0}
-
 
 def _duck_cos_raw(a: str, b: str, dim: int) -> str:
     """Unpresented cosine (the raw double) — oracle twin of the Spark
@@ -272,7 +267,6 @@ def mmr_rerank(
         f" * ({_pynorm(q)!r}), 0.0D)"
     )
     barrier = F.monotonically_increasing_id() * F.lit(0)
-    DRIVER_PASSES["mmr_pool"] += 1  # one corpus-sized top-k collect
     pool_rows = (
         emb.filter(F.col("vec_id") != 0)
         .select("vec_id", "embedding", (sim + barrier).alias("_rcs"))

@@ -372,10 +372,6 @@ def weighted_sample_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact-mixture rebalancing
 # ---------------------------------------------------------------------------
 
-#: off-plan corpus-pass counters (scan-budget gate contract — see
-#: scripts/gen_scan_budget.py OFF_PLAN and the dedup.py twin).
-DRIVER_PASSES = {"mixture_rank": 0}
-
 #: Target corpus mixture in integer percent, by language group. 'other'
 #: pools every language outside the named ones.
 MIXTURE_TARGETS: tuple[tuple[str, int], ...] = (
@@ -460,7 +456,6 @@ def mixture_rebalance_sample(docs: DataFrame) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    DRIVER_PASSES["mixture_rank"] += 1
     in_band = _mixture_banded_rank(docs).localCheckpoint()
     # band sizes fall out of the SAME window output as its max rank —
     # grouping keys exactly match the window partitioning, so this

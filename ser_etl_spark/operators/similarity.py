@@ -4166,15 +4166,6 @@ def kmeans_lloyd_step_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 TRAINED_QUANTIZER_VERSION = 2
 
 
-#: Driver-iteration telemetry: every ``_lloyd_pass`` E+M job bumps this.
-#: Training scans the corpus inside driver collects — invisible to the
-#: static plan, so the scan-budget gate (tests/test_plans.py) pins the
-#: DELTA of this counter around building ``kmeans_train_readout``
-#: instead of an empty multiset: a hidden fourth pass can't hide
-#: (VERDICT r10 #7).
-DRIVER_PASSES = {"lloyd": 0}
-
-
 def _lloyd_pass(
     vectors: DataFrame,
     cents: list[tuple[int, list[float] | None]],
@@ -4193,7 +4184,6 @@ def _lloyd_pass(
     quantized to BIGINTs IN-ENGINE (``round((mu-o)^2 * 1e9)``) so the
     driver only ever sums exact integers — Python's banker's rounding
     never touches a value."""
-    DRIVER_PASSES["lloyd"] += 1
     dim0 = next(len(v) for _, v in cents if v is not None)
     p = vectors.select(
         F.col(id_col), F.col(vec_col), _norm_col(vec_col, dim0).alias("_nv")

@@ -3224,10 +3224,6 @@ def pii_by_split_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BPE merge training (r14, VERDICT r13 #7) — the tokenizer-induction step
 # ---------------------------------------------------------------------------
 
-#: build-time driver passes (one pair-count collect per BPE iteration);
-#: pinned by the scan-budget gate's all-counter snapshot.
-DRIVER_PASSES = {"bpe_pairs": 0, "bpe_vocab_ckpt": 0}
-
 #: merge iterations for the registered readout. Each is one vocab-sized
 #: grouped aggregate + a top-1 collect — the kmeans_train pattern.
 BPE_ITERS = 3
@@ -3295,8 +3291,7 @@ def bpe_merge_steps(docs: DataFrame, iters: int = BPE_ITERS) -> DataFrame:
       aggregate with map-side partials, weighted by word count;
     - top-1 merge pair via weight-DESC limit 1 (TakeOrdered, ties
       broken lexicographically so the answer is engine-exact);
-    - O(1) driver state: ONE collected row per iteration
-      (``DRIVER_PASSES['bpe_pairs']``);
+    - O(1) driver state: ONE collected row per iteration;
     - the next symbolization is an array-local fold expression
       (:func:`_bpe_fold_expr`) composed onto the vocab lineage — no
       shuffle, no UDF, stays in codegen.
@@ -3313,11 +3308,6 @@ def bpe_merge_steps(docs: DataFrame, iters: int = BPE_ITERS) -> DataFrame:
     oracle's per-iteration CTE chain goes empty at the same point).
     """
     words = bpe_word_counts(docs)
-    # the eager checkpoint moves the corpus scan into a BUILD-time job
-    # no static plan gate can see — record it so the scan-budget gate
-    # pins it and a regression adding build-time corpus jobs here fails
-    # loudly (ADVICE r14 #1, the mixture_rebalance hidden-pass class)
-    DRIVER_PASSES["bpe_vocab_ckpt"] += 1
     vocab = words.select(
         "cnt", F.expr(_bpe_rep0_expr()).alias("rep0")
     ).localCheckpoint(eager=True)
@@ -3349,7 +3339,6 @@ def bpe_merge_steps(docs: DataFrame, iters: int = BPE_ITERS) -> DataFrame:
             .orderBy(F.desc("weight"), "pair_a", "pair_b")
             .limit(1)
         )
-        DRIVER_PASSES["bpe_pairs"] += 1
         top = pairs.collect()
         if not top:
             break
@@ -3367,8 +3356,8 @@ def bpe_merge_steps(docs: DataFrame, iters: int = BPE_ITERS) -> DataFrame:
     # ONE stats pass for every iteration: all |merges|+1 symbol totals
     # are conditional sums over the same CHECKPOINTED vocab (no corpus
     # scan at all in the returned plan; the per-iteration pair-count
-    # jobs above remain the only other passes, pinned by the bpe_pairs
-    # driver counter).
+    # jobs above remain the only other passes, pinned by the query's
+    # build-time row in the scan budget).
     sums = [
         F.coalesce(
             F.sum(F.col("cnt") * F.expr(f"size(split({r}, ' '))")),

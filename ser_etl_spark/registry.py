@@ -354,12 +354,12 @@ VERIFIED_PRIOR_ROUNDS: frozenset[str] = frozenset({
 
 def _is_stable_const(value: object) -> bool:
     """True only for deeply-immutable values whose repr is a pure
-    function of the SOURCE. Mutable module globals (lazy caches,
-    DRIVER_PASSES counters) and identity objects (``object()``
+    function of the SOURCE. Mutable module globals (lazy caches such as
+    ``similarity._PLANE_CACHE``) and identity objects (``object()``
     sentinels — repr carries a memory address) are runtime state, not
     code: folding them would rotate consumers on every process or
-    every counter tick. Answer-affecting mutable constants, if one
-    ever exists, must be declared in ``_answer_helper_sources``."""
+    every cache fill. Answer-affecting mutable constants, if one ever
+    exists, must be declared in ``_answer_helper_sources``."""
     if value is None or isinstance(value, (str, int, float, bool, bytes)):
         return True
     if isinstance(value, (tuple, frozenset)):

@@ -59,11 +59,9 @@ _TIER2_PATTERNS = (
     "tests/test_empty_corpus.py",
     # redundant-with-tier2 or driver-contract-only gates: the schema
     # canonicalizability sweep re-builds every query (driver-loop
-    # builders dominate), the counter contract is replayed by the
-    # tier2 scan-budget sweep, the unicode fuzz and the clique corpus
+    # builders dominate), the unicode fuzz and the clique corpus
     # re-verify oracles tier1 already checks on the standard corpora
     "test_output_schema_is_driver_canonicalizable",
-    "test_driver_passes_contract",
     "TestHypothesisFuzz",
     "test_identical_corpus_parity",
     "test_nullvec_corpus_parity",

@@ -332,12 +332,13 @@ class TestVerificationRotation:
             spec_source_hash(spec)
         )
 
-    def test_volatile_module_state_stays_out_of_the_pin(self):
-        """Mutable module globals (DRIVER_PASSES counters, lazy caches)
-        and object() sentinels are runtime state, not code: the pin
-        must not move when they do (the r14 first-cut closure folded
-        similarity._NULL_QUERY's memory-address repr and rotated the
-        whole ANN family on every process)."""
+    def test_volatile_module_state_stays_out_of_the_pin(self, monkeypatch):
+        """Mutable module globals (lazy caches) and object() sentinels
+        are runtime state, not code: the pin must not move when they do
+        (the r14 first-cut closure folded similarity._NULL_QUERY's
+        memory-address repr and rotated the whole ANN family on every
+        process)."""
+        from ser_etl_spark import registry
         from ser_etl_spark.operators import similarity
         from ser_etl_spark.registry import (
             _is_stable_const,
@@ -351,15 +352,23 @@ class TestVerificationRotation:
         assert not _is_stable_const(("x", [1]))  # nested mutability
         assert _is_stable_const(("a", 1, frozenset({"b"})))
 
-        spec = all_queries()["kmeans_train_readout"]
+        spec = all_queries()["lsh_ann_topk"]
+
+        def folding_every_constant() -> str:
+            with monkeypatch.context() as m:
+                m.setattr(registry, "_is_stable_const", lambda v: True)
+                return _spec_source_hash_uncached(spec)
+
         before = _spec_source_hash_uncached(spec)
-        saved = dict(similarity.DRIVER_PASSES)
+        folded = folding_every_constant()
+        similarity._PLANE_CACHE[(0, 0)] = []
         try:
-            similarity.DRIVER_PASSES["lloyd"] += 17
             assert _spec_source_hash_uncached(spec) == before
+            # the builder's closure does reach the cache: with every
+            # constant folded, the same mutation moves the pin
+            assert folding_every_constant() != folded
         finally:
-            similarity.DRIVER_PASSES.clear()
-            similarity.DRIVER_PASSES.update(saved)
+            del similarity._PLANE_CACHE[(0, 0)]
 
     def test_helper_constant_repr_is_hashseed_stable(self):
         """Set-typed helper constants must render sorted: a
