@@ -13,9 +13,10 @@ GENERATED and ASSERTED here, never hand-written):
      names, recomputed pending count) plus the ``VERIFIED_PRIOR_ROUNDS``
      frozenset literal. Without ``--write`` the block is printed to stdout.
   2. ``ser_etl_spark/_verified_hashes.py`` — generated module recording the
-     CURRENT builder source hash per query. ``registry.all_queries`` rotates
-     any query whose builder source no longer matches back into the driver's
-     verification window automatically.
+     CURRENT builder source hash per query (a held-out name keeps the hash
+     recorded before, see :func:`source_hashes`). ``registry.all_queries``
+     rotates any query whose builder source no longer matches back into
+     the driver's verification window automatically.
   3. stderr — the recomputed pending count (= registered − verified after
      excludes), ASSERTED against the driver's ~50-row window so an
      overflowing window fails loudly at regeneration time instead of
@@ -30,7 +31,8 @@ implementation was deeply rewritten SINCE their green row (through shared
 helpers the source hash can't see, or before this regeneration — the hash
 file records CURRENT hashes, so pre-regeneration rewrites are invisible
 to the automatic rotation). Excluded names are dropped from the generated
-frozenset so they re-enter the driver window.
+frozenset so they re-enter the driver window, and keep their previously
+recorded hash, so re-adding one without a green row cannot verify it.
 """
 
 from __future__ import annotations
@@ -85,6 +87,26 @@ def generated_block(
     return "\n".join(lines)
 
 
+def source_hashes(
+    specs: dict,
+    current,
+    recorded: dict[str, str],
+    held_out: set[str],
+) -> dict[str, str]:
+    """Hash per registered query for ``_verified_hashes.py``: ``current``
+    (spec -> hash or None) of its builder source, except that a held-out
+    name keeps its ``recorded`` hash, if any. Its current source is the
+    rewrite that has not been verified; recording it would let the
+    rewrite count as verified once the name is back in
+    ``VERIFIED_PRIOR_ROUNDS``."""
+    out: dict[str, str] = {}
+    for name in sorted(specs):
+        h = recorded.get(name) if name in held_out else current(specs[name])
+        if h is not None:
+            out[name] = h
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("paths", nargs="*")
@@ -115,6 +137,11 @@ def main() -> None:
                 verified.add(name)
 
     from ser_etl_spark.registry import all_queries, spec_source_hash
+
+    try:
+        from ser_etl_spark._verified_hashes import VERIFIED_SOURCE_HASHES
+    except ImportError:  # first generation
+        VERIFIED_SOURCE_HASHES = {}
 
     specs = all_queries()
     # a green row for a since-deleted/renamed query must not linger
@@ -163,8 +190,11 @@ def main() -> None:
     else:
         print(block)
 
-    # Record current builder source hashes for every registered query (not
-    # just the verified set, so a later round's regeneration has them all).
+    # Record builder source hashes for every registered query (not just the
+    # verified set, so a later round's regeneration has them all).
+    hashes = source_hashes(
+        specs, spec_source_hash, VERIFIED_SOURCE_HASHES, excluded
+    )
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "ser_etl_spark",
@@ -178,10 +208,8 @@ def main() -> None:
             'builder source has since changed back into the driver window.\n"""\n\n'
         )
         fh.write("VERIFIED_SOURCE_HASHES: dict[str, str] = {\n")
-        for name in sorted(specs):
-            h = spec_source_hash(specs[name])
-            if h is not None:
-                fh.write(f'    "{name}": "{h}",\n')
+        for name, h in hashes.items():
+            fh.write(f'    "{name}": "{h}",\n')
         fh.write("}\n")
     print(f"# wrote {out} ({len(specs)} hashes)", file=sys.stderr)
 

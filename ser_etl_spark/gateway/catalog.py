@@ -6,13 +6,17 @@ from the most recently *published* snapshot, re-resolving when a TTL
 expires (120 s) or the manifest version changes. Instead of downloading an
 embedded DB file, we point temp views at the snapshot's Parquet directory —
 on a cluster that is an object-store prefix and executors read splits
-directly, so "refresh" is a metadata-only operation.
+directly, so "refresh" is a metadata-only operation. Like the reference,
+which opens one snapshot file per request, each request reads exactly one
+version: the views of a version live in a session of their own.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
+import threading
 import time
 
 from pyspark.sql import SparkSession
@@ -22,39 +26,34 @@ from ser_etl_spark.sources.parquet import register_views
 DEFAULT_TTL_S = 120.0
 
 
+@dataclasses.dataclass(frozen=True)
+class Generation:
+    """One resolved snapshot version and the session holding its views
+    (``tables``) and nothing else. ``version`` is ``None`` for a plain
+    directory."""
+
+    version: str | None
+    snapshot_dir: str
+    session: SparkSession
+    tables: tuple[str, ...]
+    loaded_at: float
+
+
 class SnapshotCatalog:
-    """Registers the tables of the current snapshot as temp views."""
+    """Serves the current snapshot as one :class:`Generation` at a time."""
 
     def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        ttl_s: float = DEFAULT_TTL_S,
-        tables: tuple[str, ...] | None = None,
-        cache_tables: bool = False,
+        self, spark: SparkSession, root: str, ttl_s: float = DEFAULT_TTL_S
     ) -> None:
         """``root`` is either a published snapshot store (containing
         ``current/manifest.json`` pointing at a versioned snapshot dir, as
         written by :mod:`ser_etl_spark.etl.publish`) or a plain directory
-        of parquet tables (the test fixtures).
-
-        ``cache_tables=True`` pins each registered view in the executor
-        cache after (re)resolution — the serving-path analog of the
-        reference holding its whole DuckDB file locally
-        (``query_engine.py:78-115``): repeated gateway queries hit
-        memory, not parquet. Caches are dropped and re-pinned when the
-        snapshot version changes, so a refresh never serves stale data.
-        """
+        of parquet tables (the test fixtures)."""
         self.spark = spark
         self.root = root
         self.ttl_s = ttl_s
-        self.tables = tables
-        self.cache_tables = cache_tables
-        self._resolved_dir: str | None = None
-        self._version: str | None = None
-        self._loaded_at: float = 0.0
-        self._cached: tuple[str, ...] = ()
-        self._registered: tuple[str, ...] = ()
+        self._current: Generation | None = None
+        self._lock = threading.Lock()
 
     # -- manifest resolution ------------------------------------------------
 
@@ -70,22 +69,27 @@ class SnapshotCatalog:
         except (OSError, json.JSONDecodeError):
             return {}
 
-    def _resolve(self) -> tuple[str, str | None]:
-        """Return (snapshot_dir, version) for the current snapshot."""
-        manifest = self.read_manifest()
-        if manifest.get("snapshot_dir"):
-            return manifest["snapshot_dir"], str(manifest.get("version"))
-        return self.root, None  # plain directory layout
+    def _session(self) -> SparkSession:
+        """A child of the caller's session with its runtime ``spark.sql.*``
+        conf copied in (a bare ``newSession()`` starts from the defaults)
+        and no temp views."""
+        session = self.spark.newSession()
+        for key, value in self.spark.conf.getAll.items():
+            if key.startswith("spark.sql.") and self.spark.conf.isModifiable(key):
+                session.conf.set(key, value)
+        return session
 
-    def _register_manifest_views(self) -> list[str]:
+    def _register_manifest_views(
+        self, session: SparkSession, manifest: dict
+    ) -> list[str]:
         """Register summary views recorded in the manifest (reference A10:
         the snapshot ships v_inventory_summary; here view *definitions*
         travel in the manifest and Catalyst computes them on demand).
         Returns the names actually created."""
         created: list[str] = []
-        for name, sql in self.read_manifest().get("views", {}).items():
+        for name, sql in manifest.get("views", {}).items():
             try:
-                self.spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {sql}")
+                session.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {sql}")
             except Exception:  # pragma: no cover - malformed view def
                 continue
             created.append(name)
@@ -93,87 +97,75 @@ class SnapshotCatalog:
 
     # -- refresh ------------------------------------------------------------
 
-    def _stale(self) -> bool:
-        if self._resolved_dir is None:
-            return True
-        return (time.monotonic() - self._loaded_at) > self.ttl_s
-
-    def refresh(self, force: bool = False) -> str:
-        """Re-resolve and re-register views if stale; returns snapshot dir.
+    def refresh(self, force: bool = False) -> Generation:
+        """The generation to serve from, re-resolved when the TTL expired.
 
         Readers always resolve through the manifest — never by listing the
         store — preserving the reference's snapshot atomicity (readers see
-        only fully published versions, ``s3_uploader.py:44-55``).
+        only fully published versions, ``s3_uploader.py:44-55``). One
+        thread refreshes at a time: a request that finds a stale
+        generation while another thread refreshes serves the stale one.
+        Only the first resolve and ``force`` wait for the refresher.
         """
-        if not force and not self._stale():
-            return self._resolved_dir  # type: ignore[return-value]
-        snapshot_dir, version = self._resolve()
-        if force or snapshot_dir != self._resolved_dir or version != self._version:
-            # Explicit table list > manifest-declared tables > the default
-            # fixture set: the manifest is the publish-time contract of
-            # what a snapshot contains, so readers follow it.
-            tables = self.tables or tuple(
-                self.read_manifest().get("tables", {})
-            )
-            kwargs = {"tables": tables} if tables else {}
-            for name in self._cached:  # drop pins of the outgoing version
-                try:
-                    self.spark.catalog.uncacheTable(name)
-                except Exception:  # pragma: no cover - already gone
-                    pass
-            self._cached = ()
-            registered = register_views(self.spark, snapshot_dir, **kwargs)
-            view_names = self._register_manifest_views()
-            self._registered = tuple(registered) + tuple(view_names)
-            if self.cache_tables:
-                # Pin exactly the views THIS catalog just registered —
-                # enumerating the session catalog instead would pin (and
-                # later evict) caller-owned temp views sharing the
-                # session, e.g. app views or streaming memory sinks.
-                pinned = tuple(registered) + tuple(view_names)
-                for name in pinned:
-                    self.spark.catalog.cacheTable(name)
-                self._cached = pinned
-        self._resolved_dir, self._version = snapshot_dir, version
-        self._loaded_at = time.monotonic()
-        return snapshot_dir
+        gen = self._current
+        if not force and gen and time.monotonic() - gen.loaded_at <= self.ttl_s:
+            return gen
+        if not self._lock.acquire(blocking=gen is None or force):
+            return gen  # type: ignore[return-value]
+        try:
+            gen = self._current  # another thread may have refreshed it
+            manifest = self.read_manifest()
+            snapshot_dir, version = self.root, None  # plain directory layout
+            if manifest.get("snapshot_dir"):
+                snapshot_dir = manifest["snapshot_dir"]
+                version = str(manifest.get("version"))
+            if not force and gen and (gen.snapshot_dir, gen.version) == (
+                snapshot_dir, version
+            ):
+                gen = dataclasses.replace(gen, loaded_at=time.monotonic())
+            else:
+                # the manifest is the publish-time contract of what a
+                # snapshot contains; a plain directory gets the fixture set
+                tables = tuple(manifest.get("tables", {}))
+                kwargs = {"tables": tables} if tables else {}
+                session = self._session()
+                registered = register_views(session, snapshot_dir, **kwargs)
+                views = self._register_manifest_views(session, manifest)
+                gen = Generation(
+                    version,
+                    snapshot_dir,
+                    session,
+                    tuple(registered) + tuple(views),
+                    time.monotonic(),
+                )
+            self._current = gen
+            return gen
+        finally:
+            self._lock.release()
 
     # -- health / shutdown (reference main.py:78-82, :133-137) --------------
 
     def status(self) -> dict:
         """Freshness snapshot for the gateway's health envelope: resolved
-        version, age against the TTL, and the views this catalog
-        registered — without forcing a re-resolve (health checks must
+        version, age against the TTL, and the views of the current
+        generation — without forcing a re-resolve (health checks must
         stay cheap and side-effect-free)."""
-        age = (
-            time.monotonic() - self._loaded_at
-            if self._resolved_dir is not None
-            else None
-        )
+        gen = self._current
+        age = None if gen is None else time.monotonic() - gen.loaded_at
         return {
-            "snapshot_version": self._version,
-            "snapshot_dir": self._resolved_dir,
-            "snapshot_age_s": round(age, 3) if age is not None else None,
+            "snapshot_version": gen.version if gen else None,
+            "snapshot_dir": gen.snapshot_dir if gen else None,
+            "snapshot_age_s": None if age is None else round(age, 3),
             "ttl_s": self.ttl_s,
-            "stale": self._stale(),
-            "tables": list(self._registered),
+            "stale": age is None or age > self.ttl_s,
+            "tables": list(gen.tables) if gen else [],
         }
 
     def close(self) -> None:
         """Shutdown cleanup (the reference's ``shutdown_event`` →
-        ``query_engine.cleanup()``): drop every cache pin this catalog
-        created and forget the resolved snapshot, so a later use
-        re-resolves from the manifest. Idempotent."""
-        for name in self._cached:
-            try:
-                self.spark.catalog.uncacheTable(name)
-            except Exception:  # pragma: no cover - already gone
-                pass
-        self._cached = ()
-        self._registered = ()
-        self._resolved_dir = None
-        self._version = None
-        self._loaded_at = 0.0
+        ``query_engine.cleanup()``): drop the current generation, so a
+        later use re-resolves from the manifest. Idempotent."""
+        self._current = None
 
     # -- ANN index resolution (serving path) --------------------------------
 
@@ -184,7 +176,7 @@ class SnapshotCatalog:
         maintains — or ``None`` when the snapshot carries no usable index.
 
         The serving path: ANN probes called with the resolved snapshot
-        dir (``refresh()``'s return value) resolve this same artifact via
+        dir (``refresh().snapshot_dir``) resolve this same artifact via
         ``ensure_ann_index``'s published-first preference, so the gateway
         exercises exactly the index the ETL publishes — including upsert
         deltas — with zero on-demand rebuild (pinned by
@@ -231,7 +223,7 @@ class SnapshotCatalog:
         from ser_etl_spark.artifacts import manifest_fresh
         from ser_etl_spark.sources.parquet import table_path
 
-        snapshot_dir = self.refresh()
+        snapshot_dir = self.refresh().snapshot_dir
         path = os.path.join(snapshot_dir, f"{table}_{suffix}")
         if not usable_fn(path):
             return None
@@ -313,11 +305,7 @@ class SnapshotCatalog:
 
     def schema(self) -> dict[str, list[str]]:
         """SHOW TABLES + DESCRIBE per table, as ``{table: [column, ...]}``
-        (``api-service/src/query_engine.py:151-165``)."""
-        self.refresh()
-        out: dict[str, list[str]] = {}
-        for t in self.spark.catalog.listTables():
-            if t.tableType == "TEMPORARY" or t.isTemporary:
-                cols = self.spark.catalog.listColumns(t.name)
-                out[t.name] = [c.name for c in cols]
-        return out
+        (``api-service/src/query_engine.py:151-165``), over the views of
+        one generation."""
+        gen = self.refresh()
+        return {name: gen.session.table(name).columns for name in gen.tables}

@@ -17,8 +17,7 @@ answers are kept per engine, keyed by the sanitized text, the admission
 ``max_rows``, the plan's semantic hash and the exact files it reads. A
 repeat is answered from the stored rows without running a Spark job.
 A snapshot flip changes the files, so the old entry simply misses. The
-key never trusts the catalog's version string, which
-:meth:`SnapshotCatalog.refresh` updates without a lock.
+key never trusts the catalog's version string.
 """
 
 from __future__ import annotations
@@ -159,9 +158,9 @@ class SparkQueryEngine:
         start = time.time()
         clean = sanitize_query(query)
         admission = self.validator.validate(clean)
-        self.catalog.refresh()
+        gen = self.catalog.refresh()
 
-        df = self.spark.sql(clean).limit(admission.max_rows)
+        df = gen.session.sql(clean).limit(admission.max_rows)
         key = self._result_key(df, clean, admission.max_rows)
         entry = self._results.get(key) if key is not None else None
         if entry is not None:
@@ -239,9 +238,9 @@ class SparkQueryEngine:
 
         clean = sanitize_query(query)
         admission = self.validator.validate(clean)
-        self.catalog.refresh()
+        gen = self.catalog.refresh()
         return explain_string(
-            self.spark.sql(clean).limit(admission.max_rows), mode
+            gen.session.sql(clean).limit(admission.max_rows), mode
         )
 
     # -- timeout ------------------------------------------------------------

@@ -2845,16 +2845,11 @@ def semdedup_canonical(
     Same terminal-step semantics as ``dedup_canonical`` for text, with
     the embedding column as the identity signal.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    if _dim(emb, "embedding") is None:
-        # no probe-able vector anywhere (empty corpus OR every
-        # embedding NULL): no pairs exist, so EVERY row survives — the
-        # oracle's NOT IN over an empty loser set keeps all rows, and
-        # returning an empty frame here would diverge on a non-empty
-        # vector-less corpus (r8 review finding)
-        return emb.select("vec_id", "label").orderBy("vec_id")
     from ser_etl_spark.operators.dedup import duplicate_clusters
 
+    # an empty or all-NULL corpus yields no pairs, so the anti-join keeps
+    # every row — as the oracle's NOT IN over an empty loser set does
+    emb = load_table(spark, sf_dir, "embeddings")
     pairs = ann_blocked_neardup(spark, sf_dir, threshold).select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )

@@ -489,8 +489,8 @@ class TestIncrementalSync:
         assert out2.success
         assert out2.changed_rows["items"] == 2  # only the t1 rows
         cat = SnapshotCatalog(spark, store)
-        cat.refresh(force=True)
-        got = {r["id"]: r["v"] for r in spark.table("items").collect()}
+        gen = cat.refresh(force=True)
+        got = {r["id"]: r["v"] for r in gen.session.table("items").collect()}
         assert got == {1: "a", 2: "b2", 3: "c"}
 
     def test_first_cycle_falls_back_to_full(self, spark, source, tmp_path):
@@ -619,8 +619,7 @@ class TestQualityConstraints:
         assert out.success
         assert "items" in out.drift and out.drift["items"].added == ["extra"]
         cat = SnapshotCatalog(spark, store)
-        cat.refresh(force=True)
-        got = spark.table("items")
+        got = cat.refresh(force=True).session.table("items")
         assert "extra" in got.columns  # new schema won
         assert got.count() == 2
 

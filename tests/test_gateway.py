@@ -141,9 +141,10 @@ class TestCatalogRefresh:
 
     def test_plain_dir_resolution(self, spark, sf_small):
         cat = SnapshotCatalog(spark, sf_small)
-        assert cat.refresh() == sf_small
-        # second call within TTL is a no-op returning the cached dir
-        assert cat.refresh() == sf_small
+        gen = cat.refresh()
+        assert gen.snapshot_dir == sf_small and gen.version is None
+        # second call within TTL is a no-op returning the same generation
+        assert cat.refresh() is gen
 
 
 class TestRateLimiter:
@@ -392,31 +393,32 @@ class TestGatewayFront:
 
     def test_close_releases_catalog_and_logs(self, spark, sf_small, caplog):
         """Reference shutdown hook (main.py:133-137): close() drops the
-        catalog's cache pins and resolved state, logs the shutdown, and
-        leaves the front reusable (next query re-resolves)."""
+        catalog's current generation, logs the shutdown, and leaves the
+        front reusable (next query re-resolves)."""
         import json as _json
         import logging
 
-        catalog = SnapshotCatalog(spark, sf_small, cache_tables=True)
+        catalog = SnapshotCatalog(spark, sf_small)
         eng = SparkQueryEngine(spark, catalog)
         front = self._front(eng)
         front.query("good", "1.2.3.4", "SELECT COUNT(*) FROM lineitem")
-        assert catalog._cached  # pins exist while serving
+        served = catalog.refresh()
+        assert "lineitem" in served.tables  # a generation while serving
         with caplog.at_level(logging.INFO, logger="ser_etl_spark.gateway"):
             front.close()
-        assert catalog._cached == ()
+        assert catalog.status()["tables"] == []
         assert front.health()["snapshot_version"] is None
+        assert front.health()["stale"] is True
         events = [_json.loads(r.message)["event"] for r in caplog.records]
         assert "gateway.shutdown" in events
-        # reusable: the next query re-resolves and re-pins
+        # reusable: the next query re-resolves into a new generation
         res = front.query("good", "1.2.3.4", "SELECT COUNT(*) FROM lineitem")
-        assert res.row_count == 1 and catalog._cached
-        # close again (idempotent) so the shared session leaves no cache
-        # pins behind — a pinned parquet relation would make every later
-        # same-path read in the suite resolve to InMemoryRelation and
-        # break scan-shape plan assertions
+        again = catalog.refresh()
+        assert res.row_count == 1 and again is not served
+        assert again.session.table("lineitem").count() == 6000
         front.close()
-        assert catalog._cached == ()
+        front.close()  # idempotent
+        assert catalog.status()["tables"] == []
 
 
 class TestTimeTravel:
@@ -446,8 +448,8 @@ class TestTimeTravel:
         assert cat.versions()[0] == m2["version"]
         assert m1["version"] in cat.versions()
         # current serves v2; time travel reads v1 unchanged
-        cat.refresh(force=True)
-        assert spark.table("orders").count() == 200
+        gen = cat.refresh(force=True)
+        assert gen.session.table("orders").count() == 200
         assert cat.read_version(m1["version"], "orders").count() == 100
 
     def test_unknown_version_raises(self, spark, sf_small, tmp_path):
@@ -715,76 +717,15 @@ class TestVersionDiff:
         assert got == {1: "changed", 2: "changed"}
 
 
-class TestServingCache:
-    def test_tables_pinned_and_repinned_across_versions(self, spark, tmp_path):
-        from ser_etl_spark.etl.build import build_snapshot
-        from ser_etl_spark.etl.publish import publish_snapshot
-        from ser_etl_spark.gateway.catalog import SnapshotCatalog
-
-        store = str(tmp_path / "store")
-
-        def publish(n, version):
-            df = spark.range(n).withColumnRenamed("id", "k")
-            out = str(tmp_path / f"b_{version}")
-            r = build_snapshot({"t": df}, out, views={})
-            publish_snapshot(out, store, tables=r.tables, views={}, version=version)
-
-        publish(100, "20240101_000000")
-        cat = SnapshotCatalog(spark, store, cache_tables=True)
-        cat.refresh(force=True)
-        assert spark.catalog.isCached("t")
-        assert spark.table("t").count() == 100
-
-        publish(200, "20240102_000000")
-        cat.refresh(force=True)
-        # new version: re-pinned, serving fresh data (never stale cache)
-        assert spark.catalog.isCached("t")
-        assert spark.table("t").count() == 200
-        spark.catalog.uncacheTable("t")
-
-    def test_caller_owned_views_are_never_pinned(self, spark, tmp_path):
-        """cache_tables pins exactly the views the catalog registered —
-        a temp view the CALLER created in the shared session must not be
-        pinned on refresh (unintended memory) nor uncached on the next
-        version change (cache eviction of caller state)."""
-        from ser_etl_spark.etl.build import build_snapshot
-        from ser_etl_spark.etl.publish import publish_snapshot
-        from ser_etl_spark.gateway.catalog import SnapshotCatalog
-
-        store = str(tmp_path / "store2")
-
-        def publish(n, version):
-            df = spark.range(n).withColumnRenamed("id", "k")
-            out = str(tmp_path / f"c_{version}")
-            r = build_snapshot({"t": df}, out, views={})
-            publish_snapshot(out, store, tables=r.tables, views={}, version=version)
-
-        spark.range(10).createOrReplaceTempView("caller_owned_view")
-        spark.catalog.cacheTable("caller_owned_view")
-        try:
-            publish(100, "20240101_000000")
-            cat = SnapshotCatalog(spark, store, cache_tables=True)
-            cat.refresh(force=True)
-            assert "caller_owned_view" not in cat._cached
-            publish(200, "20240102_000000")
-            cat.refresh(force=True)
-            # the caller's pin survived the catalog's repin cycle
-            assert spark.catalog.isCached("caller_owned_view")
-            spark.catalog.uncacheTable("t")
-        finally:
-            spark.catalog.uncacheTable("caller_owned_view")
-            spark.catalog.dropTempView("caller_owned_view")
-
-
-def _publish_tables(spark, tmp_path, store, version, n):
-    """Publish ``t`` (``k`` = 0..n-1) and ``u`` (``k`` = 0..n/10-1) as
-    snapshot ``version`` of ``store``."""
+def _publish_tables(spark, tmp_path, store, version, n, start=0):
+    """Publish ``t`` (``k`` = start..start+n-1) and ``u`` (``k`` =
+    start..start+n/10-1) as snapshot ``version`` of ``store``."""
     from ser_etl_spark.etl.build import build_snapshot
     from ser_etl_spark.etl.publish import publish_snapshot
 
     frames = {
-        "t": spark.range(n).withColumnRenamed("id", "k"),
-        "u": spark.range(n // 10).withColumnRenamed("id", "k"),
+        "t": spark.range(start, start + n).withColumnRenamed("id", "k"),
+        "u": spark.range(start, start + n // 10).withColumnRenamed("id", "k"),
     }
     out = str(tmp_path / f"build_{version}")
     r = build_snapshot(frames, out, views={})
@@ -894,8 +835,7 @@ class TestResultReuse:
         engine, _ = self._engine(spark, tmp_path)
         # an ANSI cast error (Spark 4's default mode) raised by the tasks
         q = "SELECT CAST(concat('x', k) AS INT) FROM t WHERE 1=1"
-        engine.catalog.refresh()
-        df = spark.sql(q).limit(5000)
+        df = engine.catalog.refresh().session.sql(q).limit(5000)
         # the text is eligible for reuse, so only the failure keeps it out
         assert engine._result_key(df, q, 5000) is not None
         for _ in range(2):
@@ -1055,6 +995,194 @@ class TestResultReuse:
             assert again.cached and again.data == first.data
 
 
+class TestGenerations:
+    """Every request is served from one immutable generation: the views
+    of one published version, in a session of their own."""
+
+    #: 10 rows over v1 (``t.k`` in [0, 100), ``u.k`` in [0, 10)), 20 over
+    #: v2 (``t.k`` in [1000, 1200), ``u.k`` in [1000, 1020)), and 0 when
+    #: one version's ``t`` meets the other's ``u``.
+    JOIN = "SELECT COUNT(*) FROM t JOIN u ON t.k = u.k"
+
+    def _engine(self, spark, tmp_path, **catalog_kw):
+        store = str(tmp_path / "store")
+        _publish_tables(spark, tmp_path, store, "20240101_000000", 100)
+        engine = SparkQueryEngine(spark, SnapshotCatalog(spark, store, **catalog_kw))
+        engine.catalog.refresh()
+        _publish_tables(
+            spark, tmp_path, store, "20240102_000000", 200, start=1000
+        )
+        return engine
+
+    def _reader(self, engine, answers, errors):
+        def read() -> None:
+            try:
+                res = engine.execute_query(self.JOIN)
+                answers.append(res.data[0][res.columns[0]])
+            except Exception as exc:  # surfaced by the caller
+                errors.append(exc)
+
+        return read
+
+    def test_query_during_a_flip_reads_one_version(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A query analysed while a refresh is registering the next
+        version's first table joins tables of one version."""
+        import threading
+
+        engine = self._engine(spark, tmp_path)
+        answers, errors = [], []
+        read = self._reader(engine, answers, errors)
+        refresher = threading.get_ident()
+        frame_type = type(spark.range(0))
+        register = frame_type.createOrReplaceTempView
+        fired = []
+
+        def register_then_read(df, name):
+            register(df, name)
+            if threading.get_ident() == refresher and not fired:
+                fired.append(name)
+                reader = threading.Thread(target=read)
+                reader.start()
+                reader.join()
+
+        monkeypatch.setattr(
+            frame_type, "createOrReplaceTempView", register_then_read
+        )
+        engine.catalog.refresh(force=True)
+        monkeypatch.undo()
+        assert fired and errors == []
+        assert answers[0] in (10, 20)
+        res = engine.execute_query(self.JOIN)
+        assert res.data[0][res.columns[0]] == 20
+
+    def test_one_refresher_per_flip(self, spark, tmp_path, monkeypatch):
+        """Three requests find v1 stale once v2 is published; one of them
+        registers v2 (slowly) and the others serve v1 meanwhile."""
+        import threading
+        import time
+
+        from ser_etl_spark.gateway import catalog as catalog_mod
+
+        engine = self._engine(spark, tmp_path, ttl_s=0.0)
+        v2_dir = engine.catalog.read_manifest()["snapshot_dir"]
+        register = catalog_mod.register_views
+        passes = []
+
+        def slow_register(session, snapshot_dir, **kwargs):
+            passes.append(snapshot_dir)
+            time.sleep(0.5)
+            return register(session, snapshot_dir, **kwargs)
+
+        monkeypatch.setattr(catalog_mod, "register_views", slow_register)
+        answers, errors = [], []
+        read = self._reader(engine, answers, errors)
+        threads = [threading.Thread(target=read) for _ in range(3)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+        assert errors == []
+        assert passes.count(v2_dir) == 1
+        assert len(answers) == 3 and set(answers) <= {10, 20}
+        assert engine.catalog.refresh().snapshot_dir == v2_dir
+
+    def test_refresh_stress_builds_each_version_once(
+        self, tmp_path, monkeypatch
+    ):
+        """8 threads (more than this host's cores) refresh a zero-TTL
+        catalog with a 1 µs switch interval while the manifest flips 30
+        times: each version is built at most once, and no thread sees an
+        older version after a newer one. Registration is stubbed out, so
+        only the catalog's own bookkeeping runs."""
+        import json
+        import os
+        import sys
+        import threading
+        import time
+
+        from ser_etl_spark.gateway import catalog as catalog_mod
+
+        current = tmp_path / "current"
+        current.mkdir()
+
+        def publish(v: int) -> None:
+            doc = {"version": v, "snapshot_dir": f"/snapshots/{v}"}
+            (current / "next.json").write_text(json.dumps(doc))
+            os.replace(current / "next.json", current / "manifest.json")
+
+        built = []
+        monkeypatch.setattr(
+            catalog_mod,
+            "register_views",
+            lambda session, snapshot_dir, **kw: built.append(snapshot_dir) or {},
+        )
+        monkeypatch.setattr(SnapshotCatalog, "_session", lambda self: None)
+        publish(0)
+        cat = SnapshotCatalog(None, str(tmp_path), ttl_s=0.0)
+        stop = threading.Event()
+        regressions = []
+
+        def refresher() -> None:
+            last = -1
+            while not stop.is_set():
+                v = int(cat.refresh().version)
+                if v < last:
+                    regressions.append((last, v))
+                last = v
+
+        threads = [threading.Thread(target=refresher) for _ in range(8)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for th in threads:
+                th.start()
+            for v in range(1, 31):
+                time.sleep(0.01)
+                publish(v)
+            time.sleep(0.05)
+        finally:
+            stop.set()
+            for th in threads:
+                th.join(timeout=60)
+            sys.setswitchinterval(interval)
+        assert not any(th.is_alive() for th in threads)
+        assert regressions == []
+        assert len(built) == len(set(built)) and "/snapshots/30" in built
+
+    def test_caller_views_stay_outside_the_gateway(self, spark, sf_small):
+        """A temp view the caller created on its own session is neither
+        queryable nor listed through the gateway."""
+        spark.range(3).createOrReplaceTempView("caller_only_view")
+        try:
+            engine = SparkQueryEngine(spark, SnapshotCatalog(spark, sf_small))
+            with pytest.raises(Exception, match="caller_only_view"):
+                engine.execute_query("SELECT * FROM caller_only_view")
+            schema = engine.get_schema()
+            assert "lineitem" in schema and "caller_only_view" not in schema
+            http = TestHttpIngress()
+            status, body, _ = http._get(
+                http._app(engine), "/schema", token="good"
+            )
+            assert status == 200 and body["schema"] == schema
+        finally:
+            spark.catalog.dropTempView("caller_only_view")
+
+    def test_queries_run_under_the_callers_sql_conf(self, spark, sf_small):
+        key = "spark.sql.ansi.enabled"
+        prior = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            engine = SparkQueryEngine(spark, SnapshotCatalog(spark, sf_small))
+            res = engine.execute_query(
+                "SELECT CAST('x' AS INT) AS v FROM orders WHERE o_orderkey = 1"
+            )
+            assert res.data == [{"v": None}]
+        finally:
+            spark.conf.set(key, prior)
+
+
 class TestExplain:
     def test_explain_returns_plan_without_running(self, spark, sf_small):
         from ser_etl_spark.gateway.catalog import SnapshotCatalog
@@ -1116,7 +1244,7 @@ class TestSnapshotAnnIndex:
         from ser_etl_spark.operators import similarity as S
 
         cat = self._publish_with_index(spark, sf_small, tmp_path)
-        snap = cat.refresh()
+        snap = cat.refresh().snapshot_dir
         idx = cat.ann_index_dir()
         assert idx == os.path.join(snap, "embeddings_ann_index")
         # ensure_ann_index resolves the SAME published artifact
@@ -1181,7 +1309,7 @@ class TestSnapshotTextArtifacts:
         store = str(tmp_path / "store")
         publish_snapshot(build, store, tables=report.tables, views={})
         cat = SnapshotCatalog(spark, store)
-        snap = cat.refresh()
+        snap = cat.refresh().snapshot_dir
         assert cat.minhash_bands_dir() == os.path.join(
             snap, "documents_minhash_bands"
         )

@@ -265,6 +265,22 @@ class TestVerificationRotation:
             f"{target} did not rotate to the pending front"
         )
 
+    def test_held_out_names_keep_their_recorded_hash(self):
+        """``update_verified.py --exclude`` holds a rewritten query out of
+        the verified set. Its recorded hash must stay the one from before
+        the rewrite, so that putting the name back without a green row
+        leaves it rotated into the driver window."""
+        from scripts.update_verified import source_hashes
+
+        specs = {"kept": "a", "held": "b", "unhashed": None, "new_held": "c"}
+        got = source_hashes(
+            specs,
+            lambda src: None if src is None else f"now-{src}",
+            recorded={"kept": "old-a", "held": "old-b"},
+            held_out={"held", "new_held"},
+        )
+        assert got == {"kept": "now-a", "held": "old-b"}
+
     def test_oracle_text_participates_in_the_hash(self):
         import dataclasses
 
